@@ -9,6 +9,17 @@ import org.apache.spark.sql.SparkSession
   * in the JSON (`errors` map) instead of silently recording a time.
   */
 object Bench {
+  /** A JSON number; NaN and ±Infinity have no JSON literal, so they are
+    * quoted ("NaN", "Infinity", "-Infinity") — one bare non-finite token
+    * would make the whole record unparseable. */
+  private[graft] def jnum(v: Double): String =
+    if (v.isNaN || v.isInfinite) "\"" + v + "\"" else v.toString
+
+  /** [[jnum]] rounded to 4 decimals (0.1 ms), for the short summary line. */
+  private[graft] def jnum4(v: Double): String =
+    if (v.isNaN || v.isInfinite) jnum(v)
+    else (math.floor(v * 10000 + 0.5) / 10000).toString
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -126,7 +137,6 @@ object Bench {
     def jq(s: String): String =
       "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
         .replaceAll("[\\x00-\\x1f]", " ") + "\""
-    def jnum(v: Double): String = if (v.isNaN) "\"NaN\"" else v.toString
     def jmap(f: ((Double, Double, Double, Double)) => Double): String =
       results.map { case (k, t) => jq(k) + ":" + jnum(f(t)) }
         .mkString("{", ",", "}")
@@ -136,7 +146,7 @@ object Bench {
     val loads = jmap(_._4)
     val errs = errors.map { case (k, v) => jq(k) + ":" + jq(v) }.mkString("{", ",", "}")
     val total = results.map(_._2._1).filterNot(_.isNaN).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,""" +
+    val line = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","reps":$reps,""" +
       s""""subsec_extra_reps":$subSecExtra,"queries":$qs,"medians":$medians,""" +
       s""""spreads":$spreads,"load_start":${jnum(loadStart)},""" +
       s""""load_end":${jnum(loadavg1())},"load_after_query":$loads,""" +
@@ -175,14 +185,12 @@ object Bench {
     // last line parses as nothing at all, so medians/spreads stay on
     // the first line + the $outPath artifact rather than risking the
     // whole record for them.
-    def jnum4(v: Double): String =
-      if (v.isNaN) "\"NaN\"" else (math.floor(v * 10000 + 0.5) / 10000).toString
     val qsShort = results.map { case (k, t) => jq(k) + ":" + jnum4(t._1) }
       .mkString("{", ",", "}")
     // the detail string goes through jq too: an exotic
     // SPARK_GRAFT_BENCH_OUT (quote, backslash) must not invalidate the
     // one line whose whole point is surviving as parseable JSON
-    val shortLine = s"""{"metric":"total","value":$total,"unit":"sec",""" +
+    val shortLine = s"""{"metric":"total","value":${jnum(total)},"unit":"sec",""" +
       s""""reps":$reps,"n_queries":${results.size},"queries":$qsShort,""" +
       s""""errors":$errsShort,""" +
       s""""sf":${jq(sfDir)},"detail":${jq(

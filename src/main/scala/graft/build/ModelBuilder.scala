@@ -105,6 +105,11 @@ object ModelBuilder {
     // an earlier run's directory that may not outlive this one; a
     // bit-identical copy keeps the checksummed layout valid either way.
     registryDir.flatMap(Persistence.checkCache(_, key)).foreach { dir =>
+      // a hit never adopts a handed-in frame: return the registry
+      // reference the caller's chain took for it, or it pins the
+      // assembled cache for the session
+      preAssembled.foreach { case (df, owned) =>
+        if (owned) TimeSeries.releaseAssembled(df) }
       val src = java.nio.file.Paths.get(dir).toAbsolutePath.normalize
       val dst = java.nio.file.Paths.get(outputDir).toAbsolutePath.normalize
       if (src != dst) {

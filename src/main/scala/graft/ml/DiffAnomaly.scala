@@ -64,7 +64,108 @@ object DiffAnomaly {
       * difference as changing the partition count. */
     def segPlan(xTags: Seq[String], yTags: Seq[String],
                 feature: String => Column): Option[SegPlan[Fitted]] = None
+    /** Local-fit protocol: when defined, the fit trains in this JVM on
+      * the collected train rows' `xTags ++ yTags` feature values (rows
+      * with any null or NaN dropped, in row order). Iterative models
+      * (MLP, LSTM) collect their per-machine matrix anyway, so a
+      * fold-grouped CV collects every fold's rows in ONE pass and splits
+      * them here. */
+    def localPlan(xTags: Seq[String], yTags: Seq[String],
+                  feature: String => Column)
+        : Option[Array[Array[Double]] => Fitted] = None
+    /** Fold-grouped fit: one model per group of `groups`, `feature(g)`
+      * being group g's model-input expression. Runs ONE pass for every
+      * group at once — the [[aggPlan]] grouped by `__g` over
+      * once-projected features, else one collect split per group for a
+      * [[localPlan]]. Only a reconstructor with neither falls back to
+      * one `fit` per group. */
+    def fitGroups(groups: FoldGroups, xTags: Seq[String], yTags: Seq[String],
+                  feature: Int => String => Column): Map[Int, Fitted] = {
+      val cols = (xTags ++ yTags).distinct
+      val proj = cols.zipWithIndex.map { case (t, i) =>
+        s"__gx_$i" -> groups.byGroup(g => feature(g)(t)) }
+      val projected: String => Column = t => col(s"__gx_${cols.indexOf(t)}")
+      aggPlan(xTags, yTags, projected) match {
+        case Some((aggs, _)) =>
+          val rows = groups.agg(proj, aggs)
+          groups.ids.map(g =>
+            g -> aggPlan(xTags, yTags, feature(g)).get._2(rows(g))).toMap
+        case None if localPlan(xTags, yTags, projected).isDefined =>
+          val rows = groups.collect((xTags ++ yTags).map(t =>
+            groups.byGroup(g => feature(g)(t)).cast("double")))
+          groups.ids.map(g =>
+            g -> localPlan(xTags, yTags, feature(g)).get(rows(g))).toMap
+        case None =>
+          groups.ids.map(g => g -> fit(groups.frame.filter(col("__g") === g)
+            .drop("__g"), xTags, yTags, feature(g))).toMap
+      }
+    }
   }
+
+  /** The CV's fit groups over the row-indexed frame: `frame` holds each
+    * row once per group whose train span contains it, tagged `__g`
+    * (fold k's train prefix is group k; a final group holds every row).
+    * `riders` are aggregates — the error and scoring scaler fits — that
+    * ride the FIRST grouped aggregation a fit runs. */
+  final class FoldGroups private[ml] (val frame: DataFrame, val ids: Seq[Int],
+                                      riders: Seq[Column]) {
+    private var riderRows: Option[Map[Int, org.apache.spark.sql.Row]] =
+      if (riders.isEmpty) Some(Map.empty) else None
+
+    /** `e(g)` selected per row by its group; the shared expression
+      * itself when every group's is the same. */
+    def byGroup(e: Int => Column): Column = {
+      val es = ids.map(g => g -> e(g))
+      if (es.map(_._2).distinct.size == 1) es.head._2
+      else es.tail.foldLeft(when(col("__g") === lit(es.head._1), es.head._2)) {
+        case (acc, (g, c)) => acc.when(col("__g") === lit(g), c)
+      }
+    }
+
+    /** ONE aggregation of `aggs` grouped by group, after projecting each
+      * `proj` expression once as a named column. */
+    def agg(proj: Seq[(String, Column)], aggs: Seq[Column])
+        : Map[Int, org.apache.spark.sql.Row] = {
+      val all = if (riderRows.isEmpty) aggs ++ riders else aggs
+      val rows = frame.select(col("*") +: proj.map { case (n, c) => c.as(n) }: _*)
+        .groupBy(col("__g")).agg(all.head, all.tail: _*).collect()
+        .map(r => r.getAs[Int]("__g") -> r).toMap
+      ids.foreach(g => require(rows.contains(g), s"CV fit group $g has no rows"))
+      if (riderRows.isEmpty) riderRows = Some(rows)
+      rows
+    }
+
+    /** ONE collect of the double `cols` for every group, split per group
+      * in row order as [[Reconstructor.localPlan]] matrices. */
+    def collect(cols: Seq[Column]): Map[Int, Array[Array[Double]]] = {
+      val rows = frame.select(col("__g") +: col("__row") +: cols: _*).collect()
+      val byGroup = rows.groupBy(_.getInt(0))
+      ids.map(g => g -> matrixOf(
+        byGroup.getOrElse(g, Array.empty).sortBy(_.getLong(1)).toSeq, 2)).toMap
+    }
+
+    /** The riders' rows per group: from the first grouped aggregation,
+      * or their own pass when the fit ran none. */
+    def riderResults: Map[Int, org.apache.spark.sql.Row] =
+      riderRows.getOrElse(agg(Nil, Nil))
+  }
+
+  /** The double matrix of `rows`' columns from `from` on, dropping rows
+    * with any null or NaN cell (`na.drop("any")` semantics). */
+  private[ml] def matrixOf(rows: Seq[org.apache.spark.sql.Row],
+                           from: Int): Array[Array[Double]] =
+    rows.iterator.filter(r => (from until r.length).forall(i =>
+      !r.isNullAt(i) && !r.getDouble(i).isNaN))
+      .map(r => Array.tabulate(r.length - from)(i => r.getDouble(from + i)))
+      .toArray
+
+  /** [[Reconstructor.localPlan]] input from a train frame: the
+    * `xTags ++ yTags` features collected in partition order. */
+  private[ml] def collectMatrix(train: DataFrame, xTags: Seq[String],
+                                yTags: Seq[String],
+                                feature: String => Column): Array[Array[Double]] =
+    matrixOf(train.select((xTags ++ yTags).map(t =>
+      feature(t).cast("double")): _*).collect().toSeq, 0)
 
   /** Mergeable per-segment statistics: `aggs` compute one segment's
     * buffer (one row of a `groupBy(segment)` aggregation), `fromRow`
@@ -537,24 +638,31 @@ object DiffAnomaly {
     * rolling values are NaN; max skips them → only full frames count).
     * Then refit model+scaler on the full series.
     *
-    * When the base model and scaler expose [[SegPlan]]s (all built-ins
-    * do), the whole CV runs as TWO distributed passes regardless of
-    * nSplits: one segmented stats pass (fold train sets are prefixes =
-    * unions of segments, merged on the driver) and one grouped test pass
-    * (every fold's rolling thresholds and metrics, grouped by fold).
-    * Otherwise (preprocessing pipelines, robust error scaler) it falls
-    * back to the per-fold loop — 2 passes per fold. */
-  /** @param scoringScalerKind DEFERRED scoring scaler (r15, guide §1.2):
-    *   fit the fold-metric scaler of this kind over the full frame
+    * The CV's distributed pass count does not depend on nSplits. When the
+    * base model and error scaler expose [[SegPlan]]s and the frame is
+    * null-free, ONE segmented stats pass fits every fold (fold train sets
+    * are prefixes = unions of segments, merged after the collect).
+    * Otherwise (preprocessing pipelines, MLP/LSTM, robust error scaler,
+    * nulls) the fold-grouped path fits every fold and the final model
+    * together over [[FoldGroups]]: one grouped pass per preprocessing
+    * stage that needs statistics, then one for the models (a grouped
+    * aggregation, or one collect for local fits), with the error- and
+    * scoring-scaler fits riding the first. Both paths end in ONE grouped
+    * test pass: every fold's rolling thresholds and metrics, grouped by
+    * fold.
+    *
+    * @param scoringScalerKind DEFERRED scoring scaler: fit the
+    *   fold-metric scaler of this kind over the full frame
     *   INSIDE the CV passes instead of the caller paying a separate
     *   full-frame aggregation job first. On the fused path with a
     *   matching error-scaler kind it decodes from the segmented pass's
     *   full merge — min/max merge exactly, so the stats equal a flat
     *   fit (the same equivalence the final error scaler already relies
-    *   on); otherwise it falls back to one eager aggregation, today's
-    *   behavior. Mutually exclusive with `scoringScaler` (an
-    *   already-fitted scaler, e.g. fit on a pre-windowing frame the CV
-    *   never sees). */
+    *   on); a kind mismatch there costs one eager aggregation. On the
+    *   fold-grouped path it is the final group's error scaler (same
+    *   kind) or rides the first grouped pass (other kind). Mutually
+    *   exclusive with `scoringScaler` (an already-fitted scaler, e.g.
+    *   fit on a pre-windowing frame the CV never sees). */
   def fit(wide: DataFrame, tags: Seq[String], orderCol: String,
           base: Reconstructor, scalerKind: String = "minmax",
           nSplits: Int = 3, window: Option[Int] = None,
@@ -569,7 +677,7 @@ object DiffAnomaly {
     // y columns (`target_tag_list`, diff.py fit(X, y)); empty -> y = X
     val y = if (targetTags.isEmpty) tags else targetTags
     // persist the assembled frame FIRST: withRowIndex runs two small jobs
-    // (chunk bounds + counts) before the fold loop, which would otherwise
+    // (chunk bounds + counts) before the CV passes, which would otherwise
     // recompute the upstream resample/align per job. A caller-cached
     // frame (ModelBuilder) is left alone — re-persisting warns and the
     // unpersist would yank the caller's cache out from under it.
@@ -604,19 +712,9 @@ object DiffAnomaly {
       val widths = (6 +: window.toSeq).distinct
       def sclWith(ss: Option[FittedScaler])(c: Column, t: String): Column =
         ss match {
-          case Some(s) =>
-            val (ctr, s0) = s.stats(t); val sv = if (s0 == 0.0) 1.0 else s0
-            (c - lit(ctr)) / lit(sv)
+          case Some(s) => (c - lit(s.stats(t)._1)) / lit(s.scaleOf(t))
           case None => c
         }
-      // eager deferred-scoring fit — the fallback when the segmented
-      // pass can't supply the stats (loop path, or a kind mismatch):
-      // one aggregation over the cached indexed frame, exactly the job
-      // the caller used to run itself
-      def eagerScoring(kind: String): FittedScaler = {
-        val (aggs, dec) = Scalers.aggPlan(kind, y)
-        dec(indexed.agg(aggs.head, aggs.tail: _*).head())
-      }
       // the AGGREGATE rolling column's alias lives in a namespace no
       // tag-derived alias can reach (`__rminagg__<w>` — tag aliases are
       // `__rmin<w>__<tag>` and w starts with a digit): a tag literally
@@ -626,9 +724,8 @@ object DiffAnomaly {
           y.map(t => (s"__mae_$t", s"__rmin${w}__$t", "min", w)))
       // A8/M13/M14 fold metric scores ride the same test pass — metric
       // over scoring-scaler-transformed y/ŷ, averaged over tags
-      // (`build_model.py:274-289,377-446`). Built per path because a
-      // DEFERRED scoring scaler's stats only exist once that path has
-      // resolved them (segmented-merge decode or the eager fallback).
+      // (`build_model.py:274-289,377-446`). Built once the fit path has
+      // resolved a DEFERRED scoring scaler's stats.
       def testAggsFor(ss: Option[FittedScaler]): Seq[Column] = {
         val scl = sclWith(ss) _
         val metricAggs = for { (name, fn) <- foldMetrics; t <- y }
@@ -645,70 +742,41 @@ object DiffAnomaly {
         name => if (row.isNullAt(row.fieldIndex(name))) Double.NaN
                 else row.getAs[Double](name)
 
-      val fusedPlan = for {
-        mp <- base.segPlan(tags, y, feat)
-        sp <- Scalers.segPlan(scalerKind, y)
-      } yield (mp, sp)
+      // what a fit path resolves: each fold's (model, error scaler), the
+      // final pair over every row, and the scoring scaler
+      type Fits = (Seq[(CrossValidate.Fold, (Fitted, FittedScaler))],
+        Fitted, FittedScaler, Option[FittedScaler])
 
-      // ---- per-fold loop: 2 passes per fold (model+scaler fused into
-      // one train agg; thresholds+metrics into one test agg). Used when
-      // the base/scaler has no mergeable statistics (preprocessing
-      // pipelines, robust scaler) or the frame fails the null check ----
-      def loopPath(): (Seq[(CrossValidate.Fold, String => Double)],
-          Fitted, FittedScaler) = {
-        val testAggs = testAggsFor(
-          scoringScaler.orElse(scoringScalerKind.map(eagerScoring)))
-        val res = folds.map { f =>
-          val train = CrossValidate.trainFold(indexed, f)
-          val test = CrossValidate.testFold(indexed, f)
-          val (m, sc) = fitModelAndScaler(train, tags, y, base, scalerKind)
-          val metricInputs =
-            if (foldMetrics.isEmpty) Nil
-            else y.flatMap(t =>
-              Seq(qc(t).as(s"__y_$t"), m.predictCol(t).as(s"__p_$t")))
-          val scored = test.select(
-            (col("__row") +:
-              scaledMseCol(m, sc, y).as("__mse") +:
-              (y.map(t => abs(qc(t) - m.predictCol(t)).as(s"__mae_$t")) ++
-                metricInputs)): _*)
-          val rolled = Windows.chunkedTrailingMulti(scored, "__row",
-            f.testStart, rollSpecs, totalRows = f.nTest)
-          f -> getterOf(rolled.agg(testAggs.head, testAggs.tail: _*).head())
+      // ---- segments bounded by the fold TRAIN ends (for plain folds
+      // trainEnd == testStart; windowed folds leave a gap of lag-context
+      // rows between them); ONE stats pass, fold k's train fit = merge
+      // of segments 0..k. None when the frame holds nulls ----
+      def fusedFits(mp: SegPlan[Fitted], sp: SegPlan[FittedScaler]): Option[Fits] = {
+        val segOf = folds.tail.foldLeft(
+          when(col("__row") < folds.head.trainEnd, lit(0))) {
+          (acc, f) => acc.when(col("__row") < f.trainEnd, lit(f.index))
+        }.otherwise(lit(folds.size))
+        // null-integrity counts ride the same pass: the mergeable
+        // statistics weight segments by row count, which only equals the
+        // aggregates' (null-skipping) population on null-free data — any
+        // null falls back to the fold-grouped path, whose per-group
+        // aggregates keep the flat fit's pairwise-deletion semantics
+        val checkCols = (tags ++ y).distinct
+        val nullAggs = count(lit(1)).as("__n_all") +:
+          count(col(orderCol)).as("__n_ord") +:
+          checkCols.zipWithIndex.map { case (t, i) =>
+            count(feat(t)).as(s"__n_$i") }
+        val aggsAll = nullAggs ++ mp.aggs ++ sp.aggs
+        val segRows = indexed.groupBy(segOf.as("__seg"))
+          .agg(aggsAll.head, aggsAll.tail: _*)
+          .collect().sortBy(_.getAs[Int]("__seg"))
+        val clean = segRows.length == folds.size + 1 && segRows.forall { r =>
+          val na = r.getAs[Long]("__n_all")
+          r.getAs[Long]("__n_ord") == na &&
+            checkCols.indices.forall(i => r.getAs[Long](s"__n_$i") == na)
         }
-        val (fm, fs) = fitModelAndScaler(indexed, tags, y, base, scalerKind)
-        (res, fm, fs)
-      }
-
-      def fusedPath(mp: SegPlan[Fitted], sp: SegPlan[FittedScaler])
-          : (Seq[(CrossValidate.Fold, String => Double)], Fitted, FittedScaler) = {
-          // ---- segments bounded by the fold TRAIN ends (for plain
-          // folds trainEnd == testStart; windowed folds leave a gap of
-          // lag-context rows between them); ONE stats pass, fold k's
-          // train fit = merge of segments 0..k ----
-          val segOf = folds.tail.foldLeft(
-            when(col("__row") < folds.head.trainEnd, lit(0))) {
-            (acc, f) => acc.when(col("__row") < f.trainEnd, lit(f.index))
-          }.otherwise(lit(folds.size))
-          // null-integrity counts ride the same pass: the mergeable
-          // statistics weight segments by row count, which only equals
-          // the aggregates' (null-skipping) population on null-free
-          // data — any null falls back to the per-fold loop, whose
-          // pairwise-deletion semantics match the flat fit exactly
-          val checkCols = (tags ++ y).distinct
-          val nullAggs = count(lit(1)).as("__n_all") +:
-            count(col(orderCol)).as("__n_ord") +:
-            checkCols.zipWithIndex.map { case (t, i) =>
-              count(feat(t)).as(s"__n_$i") }
-          val aggsAll = nullAggs ++ mp.aggs ++ sp.aggs
-          val segRows = indexed.groupBy(segOf.as("__seg"))
-            .agg(aggsAll.head, aggsAll.tail: _*)
-            .collect().sortBy(_.getAs[Int]("__seg"))
-          val clean = segRows.length == folds.size + 1 && segRows.forall { r =>
-            val na = r.getAs[Long]("__n_all")
-            r.getAs[Long]("__n_ord") == na &&
-              checkCols.indices.forall(i => r.getAs[Long](s"__n_$i") == na)
-          }
-          if (!clean) return loopPath()
+        if (!clean) None
+        else {
           val mBufs = segRows.map(mp.fromRow)
           val sBufs = segRows.map(sp.fromRow)
           var mAcc = mBufs(0)
@@ -723,68 +791,111 @@ object DiffAnomaly {
           mAcc = mp.merge(mAcc, mBufs(folds.size))
           sAcc = sp.merge(sAcc, sBufs(folds.size))
           // deferred scoring scaler: the full merge above IS the
-          // full-frame fit of `scalerKind` over y — when the scoring
-          // kind matches (minmax is the only SegPlan kind, and the
-          // fused path requires the error scaler to have one), decode
-          // it instead of running a separate full-frame aggregation;
-          // min/max merge exactly, so the stats equal a flat fit. A
-          // kind mismatch falls back to the one eager aggregation the
-          // caller used to run.
-          val testAggs = testAggsFor(scoringScaler.orElse(
-            scoringScalerKind.map { k =>
-              if (k == scalerKind) sp.decode(sAcc) else eagerScoring(k)
-            }))
-
-          // ---- ONE grouped test pass: per-row expressions dispatch on
-          // the fold id; rolling frames reset per fold; final aggregates
-          // group by fold ----
-          def byFold(e: ((Fitted, FittedScaler)) => Column): Column =
-            fits.tail.foldLeft(
-              when(col("__fold") === lit(fits.head._1.index), e(fits.head._2))) {
-              case (acc, (f, ms)) =>
-                acc.when(col("__fold") === lit(f.index), e(ms))
-            }
-          // membership is an explicit BETWEEN per fold: windowed folds
-          // have gap rows between one fold's test end and the next's
-          // test start (consumed as lag context), which a boundary-only
-          // chain would misassign
-          def inTest(f: CrossValidate.Fold): Column =
-            col("__row") >= f.testStart && col("__row") < f.testEnd
-          val foldOf = folds.tail.foldLeft(
-            when(inTest(folds.head), lit(0))) {
-            (acc, f) => acc.when(inTest(f), lit(f.index))
-          }
-          val metricInputs =
-            if (foldMetrics.isEmpty) Nil
-            else y.flatMap(t => Seq(qc(t).as(s"__y_$t"),
-              byFold { case (m, _) => m.predictCol(t) }.as(s"__p_$t")))
-          val scored = indexed.withColumn("__fold", foldOf)
-            .filter(col("__fold").isNotNull)
-            .select(
-              (col("__row") +: col("__fold") +:
-                byFold { case (m, sc) => scaledMseCol(m, sc, y) }.as("__mse") +:
-                (y.map(t => byFold { case (m, _) => abs(qc(t) - m.predictCol(t)) }
-                  .as(s"__mae_$t")) ++ metricInputs)): _*)
-          val relOf = fits.tail.foldLeft(
-            when(col("__fold") === lit(fits.head._1.index),
-              col("__row") - lit(fits.head._1.testStart))) {
-            case (acc, (f, _)) =>
-              acc.when(col("__fold") === lit(f.index),
-                col("__row") - lit(f.testStart))
-          }
-          val rolled = Windows.chunkedTrailingMultiGrouped(scored, "__row",
-            col("__fold"), relOf, rollSpecs, boundedRows = folds.map(_.nTest).max)
-          val rows = rolled.groupBy(col("__fold"))
-            .agg(testAggs.head, testAggs.tail: _*)
-            .collect().map(r => r.getAs[Int]("__fold") -> r).toMap
-          (folds.map(f => f -> getterOf(rows(f.index))),
-            mp.decode(mAcc), sp.decode(sAcc))
+          // full-frame fit of `scalerKind` over y — when the scoring kind
+          // matches (minmax is the only SegPlan kind), decode it instead
+          // of running a separate full-frame aggregation; min/max merge
+          // exactly, so the stats equal a flat fit. A kind mismatch costs
+          // one eager aggregation over the cached indexed frame.
+          val scoring = scoringScaler.orElse(scoringScalerKind.map { k =>
+            if (k == scalerKind) sp.decode(sAcc)
+            else Scalers.fit(k, indexed, y)
+          })
+          Some((fits, mp.decode(mAcc), sp.decode(sAcc), scoring))
+        }
       }
 
-      val (results, finalModel, finalScaler) = fusedPlan match {
-        case Some((mp, sp)) => fusedPath(mp, sp)
-        case None => loopPath()
+      // ---- fold-grouped: every fold's train prefix plus a final
+      // all-rows group, exploded once from the cached indexed frame and
+      // fitted together — one grouped pass per fit stage ----
+      def groupedFits(): Fits = {
+        val all = folds.size
+        val member = filter(array(folds.map(f =>
+          when(col("__row") >= f.trainStart && col("__row") < f.trainEnd,
+            lit(f.index))) :+ lit(all): _*), _.isNotNull)
+        // the error scaler fits on y (`diff.py:173` scaler.fit(y)); a
+        // scoring scaler of the SAME kind is the final group's error
+        // scaler, another kind rides along
+        val (sAggs, sDec) = Scalers.aggPlan(scalerKind, y)
+        val scoringPlan =
+          scoringScalerKind.filter(_ != scalerKind).map(Scalers.aggPlan(_, y))
+        val groups = new FoldGroups(indexed.withColumn("__g", explode(member)),
+          folds.map(_.index) :+ all, sAggs ++ scoringPlan.toSeq.flatMap(_._1))
+        val models = base.fitGroups(groups, tags, y, _ => feat)
+        val riders = groups.riderResults
+        val scalers = groups.ids.map(g => g -> sDec(riders(g))).toMap
+        (folds.map(f => f -> ((models(f.index), scalers(f.index)))),
+          models(all), scalers(all),
+          scoringScaler.orElse(scoringScalerKind.map(_ =>
+            scoringPlan.fold(scalers(all))(_._2(riders(all))))))
       }
+
+      // ---- ONE grouped test pass: per-row expressions dispatch on the
+      // fold id; rolling frames reset per fold; final aggregates group
+      // by fold ----
+      def testPass(fits: Seq[(CrossValidate.Fold, (Fitted, FittedScaler))],
+                   scoring: Option[FittedScaler])
+          : Seq[(CrossValidate.Fold, String => Double)] = {
+        val testAggs = testAggsFor(scoring)
+        def byFold(e: ((Fitted, FittedScaler)) => Column): Column =
+          fits.tail.foldLeft(
+            when(col("__fold") === lit(fits.head._1.index), e(fits.head._2))) {
+            case (acc, (f, ms)) =>
+              acc.when(col("__fold") === lit(f.index), e(ms))
+          }
+        // membership is an explicit BETWEEN per fold: windowed folds
+        // have gap rows between one fold's test end and the next's test
+        // start (consumed as lag context), which a boundary-only chain
+        // would misassign
+        def inTest(f: CrossValidate.Fold): Column =
+          col("__row") >= f.testStart && col("__row") < f.testEnd
+        val foldOf = folds.tail.foldLeft(
+          when(inTest(folds.head), lit(0))) {
+          (acc, f) => acc.when(inTest(f), lit(f.index))
+        }
+        // each fold's prediction is projected ONCE per tag (`__p_<tag>`);
+        // the MSE, MAE and metric inputs read that column
+        val preds = indexed.withColumn("__fold", foldOf)
+          .filter(col("__fold").isNotNull)
+          .select(col("__row") +: col("__fold") +: y.flatMap(t => Seq(
+            qc(t).as(s"__y_$t"),
+            byFold { case (m, _) => m.predictCol(t) }.as(s"__p_$t"))): _*)
+        def err(t: String): Column = qc(s"__p_$t") - qc(s"__y_$t")
+        // scaled MSE per timestep (`diff.py:268-293`): mean over tags of
+        // (scaled ŷ − scaled y)², scaled by the fold's error scaler
+        val mse = y.map { t =>
+          val d = err(t) / byFold { case (_, sc) => lit(sc.scaleOf(t)) }
+          d * d
+        }.reduce(_ + _) / lit(y.size.toDouble)
+        val metricInputs =
+          if (foldMetrics.isEmpty) Nil
+          else y.flatMap(t => Seq(qc(s"__y_$t"), qc(s"__p_$t")))
+        val scored = preds.select(
+          (col("__row") +: col("__fold") +: mse.as("__mse") +:
+            (y.map(t => abs(qc(s"__y_$t") - qc(s"__p_$t")).as(s"__mae_$t")) ++
+              metricInputs)): _*)
+        val relOf = fits.tail.foldLeft(
+          when(col("__fold") === lit(fits.head._1.index),
+            col("__row") - lit(fits.head._1.testStart))) {
+          case (acc, (f, _)) =>
+            acc.when(col("__fold") === lit(f.index),
+              col("__row") - lit(f.testStart))
+        }
+        val rolled = Windows.chunkedTrailingMultiGrouped(scored, "__row",
+          col("__fold"), relOf, rollSpecs, boundedRows = folds.map(_.nTest).max)
+        val rows = rolled.groupBy(col("__fold"))
+          .agg(testAggs.head, testAggs.tail: _*)
+          .collect().map(r => r.getAs[Int]("__fold") -> r).toMap
+        folds.map(f => f -> getterOf(rows(f.index)))
+      }
+
+      val fusedPlan = for {
+        mp <- base.segPlan(tags, y, feat)
+        sp <- Scalers.segPlan(scalerKind, y)
+      } yield (mp, sp)
+      val (foldFits, finalModel, finalScaler, scoring) =
+        fusedPlan.flatMap { case (mp, sp) => fusedFits(mp, sp) }
+          .getOrElse(groupedFits())
+      val results = testPass(foldFits, scoring)
 
       var lastFeat: Map[String, Double] = Map.empty
       var lastAgg = Double.NaN
@@ -963,13 +1074,6 @@ object DiffAnomaly {
     } finally { indexed.unpersist(); if (!callerCached) src.unpersist() }
   }
 
-  private def fitScaler(kind: String, df: DataFrame, tags: Seq[String]): FittedScaler =
-    kind match {
-      case "minmax" => Scalers.fitMinMax(df, tags)
-      case "robust" => Scalers.fitRobust(df, tags)
-      case k => throw new IllegalArgumentException(s"unknown scaler: $k")
-    }
-
   /** Model fit + error-scaler fit in ONE distributed aggregation pass
     * over `df` when the reconstructor exposes its agg plan (all built-in
     * ones do); falls back to two passes otherwise. Identical values —
@@ -986,15 +1090,14 @@ object DiffAnomaly {
         (mDec(row), sDec(row))
       case None =>
         (base.fit(df, xTags, yTags, t => qc(t).cast("double")),
-          fitScaler(scalerKind, df, yTags))
+          Scalers.fit(scalerKind, df, yTags))
     }
 
   /** Scaled MSE per timestep (`diff.py:268-293`): mean over tags of
     * (scaled ŷ − scaled y)². */
   private def scaledMseCol(m: Fitted, sc: FittedScaler, tags: Seq[String]): Column =
     tags.map { t =>
-      val scale = { val s = sc.stats(t)._2; if (s == 0.0) 1.0 else s }
-      val d = (m.predictCol(t) - qc(t)) / lit(scale)
+      val d = (m.predictCol(t) - qc(t)) / lit(sc.scaleOf(t))
       d * d
     }.reduce(_ + _) / lit(tags.size.toDouble)
 

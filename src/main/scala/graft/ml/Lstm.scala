@@ -153,10 +153,17 @@ object Lstm {
       extends Reconstructor {
 
     def fit(train: org.apache.spark.sql.DataFrame, xTags: Seq[String],
-            yTags: Seq[String], feature: String => Column): Fitted = {
-      val cols = xTags.map(t => feature(t).cast("double")) ++
-        yTags.map(t => feature(t).cast("double"))
-      val rows = train.select(cols: _*).na.drop("any").collect()
+            yTags: Seq[String], feature: String => Column): Fitted =
+      fitMatrix(DiffAnomaly.collectMatrix(train, xTags, yTags, feature),
+        xTags, yTags, feature)
+
+    override def localPlan(xTags: Seq[String], yTags: Seq[String],
+                           feature: String => Column)
+        : Option[Array[Array[Double]] => Fitted] =
+      Some(fitMatrix(_, xTags, yTags, feature))
+
+    private def fitMatrix(rows: Array[Array[Double]], xTags: Seq[String],
+                          yTags: Seq[String], feature: String => Column): Fitted = {
       require(rows.nonEmpty, "LSTM fit on an empty (or all-null) frame")
       val n = rows.length
       val nin = xTags.size
@@ -166,8 +173,8 @@ object Lstm {
       val nfeat = seqIdx.head.length
       val nu = if (units > 0) units else math.max(4, 2 * nfeat)
 
-      val x = Array.tabulate(n, nin)((r, i) => rows(r).getDouble(i))
-      val yv = Array.tabulate(n, nout)((r, j) => rows(r).getDouble(nin + j))
+      val x = Array.tabulate(n, nin)((r, i) => rows(r)(i))
+      val yv = Array.tabulate(n, nout)((r, j) => rows(r)(nin + j))
       def stats(m: Array[Array[Double]], d: Int): (Array[Double], Array[Double]) = {
         val mu = Array.tabulate(d)(i => m.map(_(i)).sum / n)
         val sd = Array.tabulate(d) { i =>

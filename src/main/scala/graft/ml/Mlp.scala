@@ -30,8 +30,10 @@ import graft.ml.DiffAnomaly.{Fitted, Reconstructor}
   * are selected.
   *
   * No aggPlan/segPlan: an iterative fit has no mergeable sufficient
-  * statistics, so CV uses the per-fold loop — sklearn's clone-and-refit
-  * semantics per fold, exactly like the reference's cross_validate.
+  * statistics. It exposes a `localPlan` instead, so a CV collects every
+  * fold's rows in one pass and refits per fold locally — sklearn's
+  * clone-and-refit semantics per fold, exactly like the reference's
+  * cross_validate.
   */
 object Mlp {
 
@@ -161,21 +163,28 @@ object Mlp {
       (hidden, (hidden.map(_ => ActTanh) :+ ActLinear).toArray)
     }
 
+    // the single collect of the per-machine matrix (SURVEY §3.1) — X
+    // and y columns in one pass. Rows with any null are dropped
+    // (row-wise deletion — the standard NN treatment; the build path
+    // already drops gap rows, this covers direct callers)
     def fit(train: org.apache.spark.sql.DataFrame, xTags: Seq[String],
-            yTags: Seq[String], feature: String => Column): Fitted = {
-      // the single collect of the per-machine matrix (SURVEY §3.1) —
-      // X and y columns in one pass. Rows with any null are dropped
-      // (row-wise deletion — the standard NN treatment; the builder path
-      // already drops gap rows, this covers direct callers)
-      val cols = xTags.map(t => feature(t).cast("double")) ++
-        yTags.map(t => feature(t).cast("double"))
-      val rows = train.select(cols: _*).na.drop("any").collect()
+            yTags: Seq[String], feature: String => Column): Fitted =
+      fitMatrix(DiffAnomaly.collectMatrix(train, xTags, yTags, feature),
+        xTags, yTags, feature)
+
+    override def localPlan(xTags: Seq[String], yTags: Seq[String],
+                           feature: String => Column)
+        : Option[Array[Array[Double]] => Fitted] =
+      Some(fitMatrix(_, xTags, yTags, feature))
+
+    private def fitMatrix(rows: Array[Array[Double]], xTags: Seq[String],
+                          yTags: Seq[String], feature: String => Column): Fitted = {
       require(rows.nonEmpty, "MLP fit on an empty (or all-null) frame")
       val n = rows.length
       val nin = xTags.size
       val nout = yTags.size
-      val x = Array.tabulate(n, nin)((r, i) => rows(r).getDouble(i))
-      val yv = Array.tabulate(n, nout)((r, j) => rows(r).getDouble(nin + j))
+      val x = Array.tabulate(n, nin)((r, i) => rows(r)(i))
+      val yv = Array.tabulate(n, nout)((r, j) => rows(r)(nin + j))
 
       def stats(m: Array[Array[Double]], d: Int): (Array[Double], Array[Double]) = {
         val mu = Array.tabulate(d)(i => m.map(_(i)).sum / n)
@@ -377,11 +386,15 @@ object Mlp {
                           lr: Double = 0.01,
                           compressionFactor: Double = 0.5,
                           encodingLayers: Int = 2) extends Reconstructor {
+    private def sized(nin: Int): MlpReconstructor =
+      new MlpReconstructor(Windows.hourglassDims(compressionFactor,
+        encodingLayers, math.max(2, nin)), seed, epochs, lr)
     def fit(train: org.apache.spark.sql.DataFrame, xTags: Seq[String],
             yTags: Seq[String], feature: String => Column): Fitted =
-      new MlpReconstructor(
-        Windows.hourglassDims(compressionFactor, encodingLayers,
-          math.max(2, xTags.size)), seed, epochs, lr)
-        .fit(train, xTags, yTags, feature)
+      sized(xTags.size).fit(train, xTags, yTags, feature)
+    override def localPlan(xTags: Seq[String], yTags: Seq[String],
+                           feature: String => Column)
+        : Option[Array[Array[Double]] => Fitted] =
+      sized(xTags.size).localPlan(xTags, yTags, feature)
   }
 }

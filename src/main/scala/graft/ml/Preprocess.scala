@@ -122,14 +122,11 @@ object Preprocess {
   case class ImputerSpec(strategy: String, delta: Double) extends StageSpec
   case class MultiplySpec(factor: Double) extends StageSpec
 
-  /** Fit the stage chain sequentially over `df` (sklearn `Pipeline.fit`:
-    * each stage fits on the PREVIOUS stage's output — expressed as
-    * nested column expressions, one aggregation job per fitted stage, no
-    * materialized intermediates). */
-  def fitStages(df: org.apache.spark.sql.DataFrame, tags: Seq[String],
-                specs: List[StageSpec],
-                feature: String => Column): Fitted = {
-    var chain = List.empty[Stage]
+  /** One stage's fit over the previous stages' output `cur`: the fitted
+    * stage itself when it needs no statistics, else (aggregates over
+    * `cur`, decoder of their result row). */
+  private def stagePlan(spec: StageSpec, tags: Seq[String], cur: String => Column)
+      : Either[Stage, (Seq[Column], org.apache.spark.sql.Row => Stage)] = {
     // a tag that is entirely null (or all non-finite under the finite
     // mask) yields NULL aggregates; getAs[Double] would unbox those to
     // 0.0 and silently fit bogus stats — fail with the tag named instead
@@ -140,57 +137,81 @@ object Preprocess {
           "(finite) values in the training span")
       row.getDouble(i)
     }
-    specs.foreach { spec =>
-      def cur(t: String): Column = Fitted(chain).preFrom(t, feature(t))
-      val stage: Stage = spec match {
-        case MultiplySpec(f) => MultiplyStage(f)
-        case ScalerSpec("minmax") =>
-          val aggs = tags.flatMap(t =>
-            Seq(min(cur(t)).as(s"__pmin_$t"), max(cur(t)).as(s"__pmax_$t")))
-          val row = df.agg(aggs.head, aggs.tail: _*).head()
-          ScalerStage("minmax", tags.map { t =>
+    spec match {
+      case MultiplySpec(f) => Left(MultiplyStage(f))
+      case ScalerSpec("minmax") =>
+        Right((tags.flatMap(t =>
+          Seq(min(cur(t)).as(s"__pmin_$t"), max(cur(t)).as(s"__pmax_$t"))),
+          row => ScalerStage("minmax", tags.map { t =>
             val lo = stat(row, s"__pmin_$t", t)
             t -> (lo, stat(row, s"__pmax_$t", t) - lo)
-          }.toMap)
-        case ScalerSpec("robust") =>
-          val aggs = tags.flatMap(t => Seq(
-            percentile(cur(t), lit(0.5)).as(s"__pmed_$t"),
-            percentile(cur(t), lit(0.25)).as(s"__pq1_$t"),
-            percentile(cur(t), lit(0.75)).as(s"__pq3_$t")))
-          val row = df.agg(aggs.head, aggs.tail: _*).head()
-          ScalerStage("robust", tags.map { t =>
+          }.toMap)))
+      case ScalerSpec("robust") =>
+        Right((tags.flatMap(t => Seq(
+          percentile(cur(t), lit(0.5)).as(s"__pmed_$t"),
+          percentile(cur(t), lit(0.25)).as(s"__pq1_$t"),
+          percentile(cur(t), lit(0.75)).as(s"__pq3_$t"))),
+          row => ScalerStage("robust", tags.map { t =>
             val med = stat(row, s"__pmed_$t", t)
             val iqr = stat(row, s"__pq3_$t", t) - stat(row, s"__pq1_$t", t)
             t -> (med, iqr)
-          }.toMap)
-        case ScalerSpec(k) =>
-          throw new IllegalArgumentException(s"unknown scaler: $k")
-        case ImputerSpec("extremes", _) =>
-          ImputerStage(tags.map(t =>
-            t -> (Double.MaxValue, Double.MinValue)).toMap)
-        case ImputerSpec("minmax", delta) =>
-          // finite min/max (non-finite masked, like numpy masked_invalid)
-          def finite(c: Column): Column =
-            when(!isnan(c) && c =!= lit(Double.PositiveInfinity) &&
-              c =!= lit(Double.NegativeInfinity), c)
-          val aggs = tags.flatMap(t => Seq(
-            max(finite(cur(t))).as(s"__pimax_$t"),
-            min(finite(cur(t))).as(s"__pimin_$t")))
-          val row = df.agg(aggs.head, aggs.tail: _*).head()
-          ImputerStage(tags.map { t =>
+          }.toMap)))
+      case ScalerSpec(k) =>
+        throw new IllegalArgumentException(s"unknown scaler: $k")
+      case ImputerSpec("extremes", _) =>
+        Left(ImputerStage(tags.map(t =>
+          t -> (Double.MaxValue, Double.MinValue)).toMap))
+      case ImputerSpec("minmax", delta) =>
+        // finite min/max (non-finite masked, like numpy masked_invalid)
+        def finite(c: Column): Column =
+          when(!isnan(c) && c =!= lit(Double.PositiveInfinity) &&
+            c =!= lit(Double.NegativeInfinity), c)
+        Right((tags.flatMap(t => Seq(
+          max(finite(cur(t))).as(s"__pimax_$t"),
+          min(finite(cur(t))).as(s"__pimin_$t"))),
+          row => ImputerStage(tags.map { t =>
             val hi = stat(row, s"__pimax_$t", t)
             val lo = stat(row, s"__pimin_$t", t)
             val pos = if (Double.MaxValue - delta > hi) hi + delta else Double.MaxValue
             val neg = if (Double.MinValue + delta < lo) lo - delta else Double.MinValue
             t -> (pos, neg)
-          }.toMap)
-        case ImputerSpec(s, _) =>
-          throw new IllegalArgumentException(s"unknown imputer strategy: $s")
-      }
-      chain = chain :+ stage
+          }.toMap)))
+      case ImputerSpec(s, _) =>
+        throw new IllegalArgumentException(s"unknown imputer strategy: $s")
     }
-    Fitted(chain)
   }
+
+  /** Fit the stage chain sequentially over `df` (sklearn `Pipeline.fit`:
+    * each stage fits on the PREVIOUS stage's output — expressed as
+    * nested column expressions, one aggregation job per fitted stage, no
+    * materialized intermediates). */
+  def fitStages(df: org.apache.spark.sql.DataFrame, tags: Seq[String],
+                specs: List[StageSpec],
+                feature: String => Column): Fitted =
+    specs.foldLeft(empty) { (chain, spec) =>
+      val stage = stagePlan(spec, tags, t => chain.preFrom(t, feature(t))) match {
+        case Left(s) => s
+        case Right((aggs, dec)) => dec(df.agg(aggs.head, aggs.tail: _*).head())
+      }
+      Fitted(chain.stages :+ stage)
+    }
+
+  /** [[fitStages]] for every CV fit group at once: ONE grouped pass per
+    * stage that needs statistics, each group's previous-stage output
+    * projected once as a column before the aggregate. */
+  def fitStagesGrouped(groups: DiffAnomaly.FoldGroups, tags: Seq[String],
+                       specs: List[StageSpec],
+                       feature: String => Column): Map[Int, Fitted] =
+    specs.foldLeft(groups.ids.map(_ -> empty).toMap) { (chains, spec) =>
+      val proj = tags.zipWithIndex.map { case (t, i) =>
+        s"__gs_$i" -> groups.byGroup(g => chains(g).preFrom(t, feature(t))) }
+      stagePlan(spec, tags, t => col(s"__gs_${tags.indexOf(t)}")) match {
+        case Left(s) => chains.map { case (g, c) => g -> Fitted(c.stages :+ s) }
+        case Right((aggs, dec)) =>
+          val rows = groups.agg(proj, aggs)
+          chains.map { case (g, c) => g -> Fitted(c.stages :+ dec(rows(g))) }
+      }
+    }
 
   /** A fitted-model wrapper exposing the fitted preprocessing chain (for
     * model persistence). */
@@ -214,7 +235,9 @@ object Preprocess {
     * span into its transform statistics), then fits the model on the
     * transformed features with raw-space predictions via the affine
     * inverse. `aggPlan` stays None: stage fitting is sequential (stage k
-    * fits on stage k−1's output), so it cannot fuse into one pass.
+    * fits on stage k−1's output), so it cannot fuse into one pass. A CV
+    * fits every fold's chain at once instead ([[fitGroups]]): one grouped
+    * pass per stage, then the inner model's grouped fit.
     *
     * `statTags`, when set, names the columns the chain fits its stats
     * on (the RAW tag columns for windowed sequence models — lag features
@@ -233,15 +256,24 @@ object Preprocess {
       extends DiffAnomaly.Reconstructor {
     def fit(train: org.apache.spark.sql.DataFrame, xTags: Seq[String],
             yTags: Seq[String], feature: String => Column): DiffAnomaly.Fitted = {
-      // the chain fits per-tag stats over X ∪ y: X feeds the model in
-      // transformed space; a y-only target needs its own affine stats so
-      // its transformed-space prediction inverts back to raw units
-      val st = statTags.getOrElse((xTags ++ yTags).distinct)
-      val prep = fitStages(train, st,
-        specs, t => graft.Cols.q(t).cast("double"))
+      val prep = fitStages(train, statCols(xTags, yTags), specs, raw)
       PreprocessedFitted(
         inner.fit(train, xTags, yTags,
           t => prep.preFrom(prep.keyFor(t), feature(t))), prep)
     }
+    override def fitGroups(groups: DiffAnomaly.FoldGroups, xTags: Seq[String],
+                           yTags: Seq[String], feature: Int => String => Column)
+        : Map[Int, DiffAnomaly.Fitted] = {
+      val preps = fitStagesGrouped(groups, statCols(xTags, yTags), specs, raw)
+      inner.fitGroups(groups, xTags, yTags,
+        g => t => preps(g).preFrom(preps(g).keyFor(t), feature(g)(t)))
+        .map { case (g, m) => g -> PreprocessedFitted(m, preps(g)) }
+    }
+    // the chain fits per-tag stats over X ∪ y: X feeds the model in
+    // transformed space; a y-only target needs its own affine stats so
+    // its transformed-space prediction inverts back to raw units
+    private def statCols(xTags: Seq[String], yTags: Seq[String]): Seq[String] =
+      statTags.getOrElse((xTags ++ yTags).distinct)
+    private def raw(t: String): Column = qc(t).cast("double")
   }
 }

@@ -19,7 +19,8 @@ object Scalers {
     * robust → (median, q3−q1). Zero ranges fall back to scale 1 exactly
     * like sklearn's `_handle_zeros_in_scale`. */
   case class FittedScaler(kind: String, stats: Map[String, (Double, Double)]) {
-    private def scaleOf(c: String): Double = {
+    /** The scale divisor of `c` (zero ranges → 1). */
+    def scaleOf(c: String): Double = {
       val s = stats(c)._2
       if (s == 0.0) 1.0 else s
     }
@@ -92,7 +93,8 @@ object Scalers {
     case _ => None
   }
 
-  private def fitVia(kind: String, df: DataFrame, cols: Seq[String]): FittedScaler = {
+  /** Fit a scaler of `kind` over `df` in one aggregation pass. */
+  def fit(kind: String, df: DataFrame, cols: Seq[String]): FittedScaler = {
     val (aggs, dec) = aggPlan(kind, cols)
     dec(df.agg(aggs.head, aggs.tail: _*).head())
   }
@@ -100,11 +102,11 @@ object Scalers {
   /** sklearn MinMaxScaler (default feature_range (0,1)):
     * scaled = (x − min) / (max − min). */
   def fitMinMax(df: DataFrame, cols: Seq[String]): FittedScaler =
-    fitVia("minmax", df, cols)
+    fit("minmax", df, cols)
 
   /** sklearn RobustScaler (defaults: with_centering, with_scaling,
     * quantile_range (25, 75)): scaled = (x − median) / (q3 − q1), exact
     * linear-interpolated quantiles. */
   def fitRobust(df: DataFrame, cols: Seq[String]): FittedScaler =
-    fitVia("robust", df, cols)
+    fit("robust", df, cols)
 }

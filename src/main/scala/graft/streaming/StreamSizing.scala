@@ -19,7 +19,8 @@ import org.apache.spark.sql.SparkSession
   * session conf (env `SPARK_GRAFT_STREAM_STATE_PARTITIONS` as fallback
   * for harness runs) and, when set, returns a NEW session (shared
   * SparkContext, shared cache, its own conf) whose
-  * `spark.sql.shuffle.partitions` is the requested count — streams
+  * `spark.sql.shuffle.partitions` is the requested count and whose
+  * other runtime settings are copied from the caller's — streams
   * built through it pin that state-store count into fresh checkpoints.
   * DEFAULT (unset): returns the caller's session unchanged — exactly
   * today's behavior, so the driver's bench rows stay comparable and no
@@ -49,7 +50,16 @@ object StreamSizing {
           throw new IllegalArgumentException(
             s"$confKey must be a positive int, got '$v'"))
         require(n >= 1, s"$confKey must be >= 1, got $n")
+        // newSession() starts from the SparkContext conf only: carry the
+        // caller's runtime conf (timezone, ANSI, AQE, application keys)
+        // over, so a sized stream computes what the batch path computes.
+        // Static and core `spark.*` keys are shared already and cannot
+        // be set per session.
         val s = spark.newSession()
+        spark.conf.getAll.foreach { case (k, v) =>
+          if (!k.startsWith("spark.") || spark.conf.isModifiable(k))
+            s.conf.set(k, v)
+        }
         s.conf.set("spark.sql.shuffle.partitions", n.toString)
         s
     }

@@ -58,6 +58,32 @@ class BuilderSpec extends AnyFunSuite {
     assert(e.getMessage.contains("null"))
   }
 
+  test("a registry hit releases the owned pre-assembled frame it never adopts") {
+    // Project.buildAll hands each shared-resample machine a frame whose
+    // n_samples_threshold borrow the build must adopt; a registry hit
+    // returns before adopting, and used to pin the cache for the session
+    val tmp = Files.createTempDirectory("graft-build-hitborrow").toString
+    val spec = Config.machineFromConfig(Config.parseYaml(machineYaml),
+      Some("test-project"), Config.defaultGlobals)
+    def buildInto(dir: String, pre: Option[(org.apache.spark.sql.DataFrame, Boolean)]) =
+      ModelBuilder.buildSpec(spec, longFrame, "tag", "ts", "value",
+        outputDir = s"$tmp/$dir", registryDir = Some(s"$tmp/registry"),
+        closedForm = true, preAssembled = pre)
+    assert(!buildInto("cold", None).fromCache)
+    val baseline = spark.sparkContext.getPersistentRDDs.size
+    val wide = graft.data.TimeSeries.getData(longFrame, "tag", "ts", "value",
+      Config.datasetConfig(spec))
+    val (owned, took) = graft.data.TimeSeries.requireMinSamplesOwned(wide, 1)
+    assert(took && owned.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    assert(buildInto("hit", Some((owned, true))).fromCache)
+    assert(owned.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the hit must return the borrow it was handed")
+    assert(!graft.data.TimeSeries.isAssemblyRegistered(
+      owned.queryExecution.analyzed.canonicalized))
+    assert(spark.sparkContext.getPersistentRDDs.size == baseline,
+      "cached storage must return to its baseline")
+  }
+
   test("build -> save -> load -> score round-trips exactly") {
     val tmp = Files.createTempDirectory("graft-build").toString
     val res = ModelBuilder.build(

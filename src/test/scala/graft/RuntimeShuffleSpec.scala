@@ -62,6 +62,14 @@ class RuntimeShuffleSpec extends AnyFunSuite {
   }
 
   test("warm runtime shuffle counts stay at their reviewed values") {
+    // the pins below are exact counts for THIS environment: AQE's
+    // coalescing and broadcast choices move with the core count and the
+    // shuffle partition count, so a different setting must re-measure
+    // them, not fail (or pass) against counts it was never measured at
+    assert(spark.sparkContext.master == "local[4]",
+      s"pins were measured on local[4], not ${spark.sparkContext.master}")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4",
+      "pins were measured at spark.sql.shuffle.partitions=4")
     // measured on the reviewed tree (local[4], shuffle.partitions=4,
     // sf0.001). Contrast with PlanGuardSpec's fingerprints: q72's
     // fingerprint is 21 (nested cached subtrees print repeatedly) while

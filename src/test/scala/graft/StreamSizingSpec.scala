@@ -85,6 +85,34 @@ class StreamSizingSpec extends AnyFunSuite {
     } finally spark.conf.unset(StreamSizing.confKey)
   }
 
+  test("configured: the stream session keeps the caller's runtime conf") {
+    // newSession() alone starts from the SparkContext conf: a caller's
+    // runtime timezone / ANSI / AQE settings would silently revert
+    val keys = Seq("spark.sql.session.timeZone", "spark.sql.ansi.enabled",
+      "spark.sql.adaptive.enabled")
+    val before = keys.map(k => k -> spark.conf.getOption(k))
+    val set = Map("spark.sql.session.timeZone" -> "America/Sao_Paulo",
+      "spark.sql.ansi.enabled" ->
+        (!spark.conf.get("spark.sql.ansi.enabled").toBoolean).toString,
+      "spark.sql.adaptive.enabled" ->
+        (!spark.conf.get("spark.sql.adaptive.enabled").toBoolean).toString)
+    try {
+      set.foreach { case (k, v) => spark.conf.set(k, v) }
+      spark.conf.set(StreamSizing.confKey, "3")
+      val sess = StreamSizing.sessionFor(spark)
+      assert(sess ne spark)
+      set.foreach { case (k, v) =>
+        assert(sess.conf.get(k) == v, s"stream session lost $k") }
+      assert(sess.conf.get("spark.sql.shuffle.partitions") == "3")
+    } finally {
+      spark.conf.unset(StreamSizing.confKey)
+      before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
   test("a malformed knob fails loudly") {
     spark.conf.set(StreamSizing.confKey, "lots")
     try intercept[IllegalArgumentException](StreamSizing.sessionFor(spark))
