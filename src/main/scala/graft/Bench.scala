@@ -20,6 +20,43 @@ object Bench {
     if (v.isNaN || v.isInfinite) jnum(v)
     else (math.floor(v * 10000 + 0.5) / 10000).toString
 
+  // ALL control chars (< 0x20), not just newline/tab: an ESC from
+  // ANSI-colored JDBC/native error text would otherwise emit invalid
+  // JSON and void the whole round's metrics (the contract Verify's
+  // escaper documents)
+  private[graft] def jq(s: String): String =
+    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
+      .replaceAll("[\\x00-\\x1f]", " ") + "\""
+
+  /** The most UTF-8 bytes the short summary line may take: the driver
+    * keeps a ~4 KB stdout tail, and a line clipped at its front parses
+    * as nothing at all. */
+  private[graft] val SummaryBudget = 3500
+
+  /** The short summary line printed LAST: totals, the per-query min
+    * times (rounded to 0.1 ms) and the errors map. When the assembled
+    * line would exceed [[SummaryBudget]], the errors map gives way to
+    * its count — the per-query map is what the driver's parser reads. */
+  private[graft] def summaryLine(total: Double, reps: Int,
+                                 queries: Seq[(String, Double)],
+                                 errors: Seq[(String, String)],
+                                 sfDir: String, outPath: String): String = {
+    val qs = queries.map { case (k, t) => jq(k) + ":" + jnum4(t) }
+      .mkString("{", ",", "}")
+    // the detail string goes through jq too: an exotic
+    // SPARK_GRAFT_BENCH_OUT (quote, backslash) must not invalidate the
+    // one line whose whole point is surviving as parseable JSON
+    def line(errs: String) =
+      s"""{"metric":"total","value":${jnum(total)},"unit":"sec",""" +
+        s""""reps":$reps,"n_queries":${queries.size},"queries":$qs,""" +
+        s""""errors":$errs,"sf":${jq(sfDir)},"detail":${jq(
+          s"medians/spreads/loads on the first stdout JSON line and in $outPath")}}"""
+    val full = line(errors.map { case (k, v) => jq(k) + ":" + jq(v) }
+      .mkString("{", ",", "}"))
+    if (full.getBytes("UTF-8").length <= SummaryBudget) full
+    else line(s"""{"count":${errors.size}}""")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -130,13 +167,6 @@ object Bench {
         }
       name -> (mn, md, sp, loadavg1())
     }
-    // ALL control chars (< 0x20), not just newline/tab: an ESC from
-    // ANSI-colored JDBC/native error text would otherwise emit invalid
-    // JSON and void the whole round's metrics (the contract Verify's
-    // escaper documents)
-    def jq(s: String): String =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replaceAll("[\\x00-\\x1f]", " ") + "\""
     def jmap(f: ((Double, Double, Double, Double)) => Double): String =
       results.map { case (k, t) => jq(k) + ":" + jnum(f(t)) }
         .mkString("{", ",", "}")
@@ -174,27 +204,12 @@ object Bench {
     // reads as absurd query times. Print a SHORT summary line LAST
     // (r11 verdict item 1): whatever suffix of stdout the driver keeps,
     // it now ends with the totals, and a last-JSON-line parser picks up
-    // a complete object. The errors map rides along unless it alone
-    // would blow the tail budget, in which case its count does.
-    val errsShort = if (errs.length <= 600) errs else s"""{"count":${errors.size}}"""
-    // r15 (r14 verdict item 2): the driver's last-line parser only ever
-    // sees THIS line, so PERF_r{N}.per_query and the scaling block were
-    // empty two rounds running — the per-query map must ride the LAST
-    // line too. Values round to 4 decimals (0.1 ms) to keep the line
-    // ~2.8 KB: the observed driver stdout tail is ~4 KB, and a clipped
-    // last line parses as nothing at all, so medians/spreads stay on
-    // the first line + the $outPath artifact rather than risking the
-    // whole record for them.
-    val qsShort = results.map { case (k, t) => jq(k) + ":" + jnum4(t._1) }
-      .mkString("{", ",", "}")
-    // the detail string goes through jq too: an exotic
-    // SPARK_GRAFT_BENCH_OUT (quote, backslash) must not invalidate the
-    // one line whose whole point is surviving as parseable JSON
-    val shortLine = s"""{"metric":"total","value":${jnum(total)},"unit":"sec",""" +
-      s""""reps":$reps,"n_queries":${results.size},"queries":$qsShort,""" +
-      s""""errors":$errsShort,""" +
-      s""""sf":${jq(sfDir)},"detail":${jq(
-        s"medians/spreads/loads on the first stdout JSON line and in $outPath")}}"""
+    // a complete object. r15 (r14 verdict item 2): the driver's
+    // last-line parser only ever sees THIS line, so the per-query map
+    // rides it too, while medians/spreads stay on the first line + the
+    // $outPath artifact rather than risking the whole record for them.
+    val shortLine = summaryLine(total, reps,
+      results.map { case (k, t) => k -> t._1 }, errors, sfDir, outPath)
     println(shortLine)
     // file-artifact fallback for the driver's last-line parser (r12
     // verdict item 4: BENCH_r12.json still recorded "parsed": null even

@@ -1,8 +1,12 @@
 package graft.llm
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedOrdering, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Distributed connected components over a pair list — the dedup-cluster
@@ -15,33 +19,54 @@ import org.apache.spark.storage.StorageLevel
   * Components in MapReduce and Beyond", SoCC'14 — the large/small-star
   * family).
   *
-  * Scale design: each round is two hash-shuffles on node ids — a
-  * neighbor-min aggregation (map-side combinable) and a label-of-label
-  * pointer jump that halves chain depth, giving O(log diameter)
-  * convergence instead of O(diameter) for plain propagation. State per
-  * round is one (node, label) frame, persisted and lineage-cut with a
-  * checkpoint so 40-round worst cases don't replay 40 joins deep. The
-  * driver sees only the per-round changed-count (one long), never row
-  * data.
+  * Scale design: the loop runs on pair RDDs that all share ONE
+  * `HashPartitioner(spark.sql.shuffle.partitions)`. The symmetrized
+  * adjacency list is built, keyed by node and cached once; each round
+  * joins the node labels to it without a shuffle, takes the min over
+  * each node's own and its neighbors' labels (`reduceByKey`, map-side
+  * combined), then pointer-jumps — label := label(label), re-keyed by
+  * label and back by node — which halves chain depth, giving
+  * O(log diameter) rounds instead of O(diameter) for plain propagation.
+  * A round ends in ONE action: the new labels are checkpointed (lineage
+  * cut, so 40-round worst cases don't replay 40 joins deep) and a
+  * co-partitioned join with the old labels counts the changed nodes.
+  * So a round is one Spark job and no query planning: at dedup scale
+  * the per-round fixed cost of analyzing, optimizing and code-generating
+  * fresh DataFrame queries was most of the loop's time. The driver sees
+  * only the per-round changed-count (one long), never row data.
   *
-  * Storage lifecycle (hardening round 10): checkpointed frames hold
-  * RDD-level blocks that `Dataset.unpersist` (the CacheManager path)
-  * never touches — each superseded round's blocks are released
-  * in-loop via the underlying RDD, so a run holds at most TWO rounds
-  * of state regardless of iteration count, and [[release]] frees the
-  * RETURNED frame's blocks (and reliable-checkpoint files) once the
-  * caller has materialized what it needs. Repeated calls in one
-  * session return storage to baseline — ComponentsSpec pins this.
+  * Node ids are keyed as one-field `UnsafeRow`s and ordered by Spark's
+  * own SQL ordering for their type, so every orderable type (numbers,
+  * strings, dates, binary, structs) takes the same code path and
+  * "min" means what SQL's `min` means.
+  *
+  * Storage lifecycle: checkpointed label RDDs hold RDD-level blocks that
+  * `Dataset.unpersist` (the CacheManager path) never touches — each
+  * superseded round's blocks are released in-loop, so a run holds at
+  * most TWO rounds of state regardless of iteration count, and
+  * [[release]] frees the RETURNED frame's blocks (and reliable-checkpoint
+  * files) once the caller has materialized what it needs. Repeated calls
+  * in one session return storage to baseline — ComponentsSpec pins this.
   */
 object Components {
 
-  /** The checkpoint-backed RDDs at a frame's leaves (the LogicalRDD a
-    * local/reliable checkpoint wraps) — derived frames (dupClusters
-    * output) still expose ours as their scan leaf. */
-  private def ckptRdds(df: DataFrame): Seq[RDD[_]] =
-    df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+  /** The RDDs a frame reads: the LogicalRDD leaves of its plan and
+    * their whole RDD lineage. A returned frame's leaf is the row
+    * conversion of the final labels checkpoint, and derived frames
+    * (dupClusters output) keep that leaf, so the walk reaches ours. */
+  private def ckptRdds(df: DataFrame): Seq[RDD[_]] = {
+    val seen = scala.collection.mutable.Map.empty[Int, RDD[_]]
+    def walk(r: RDD[_]): Unit =
+      if (!seen.contains(r.id)) {
+        seen(r.id) = r
+        r.dependencies.foreach(d => walk(d.rdd))
+      }
+    df.queryExecution.analyzed.foreach {
+      case l: org.apache.spark.sql.execution.LogicalRDD => walk(l.rdd)
+      case _ =>
     }
+    seen.values.toSeq
+  }
 
   /** Checkpoints THIS module created — [[release]] only ever frees
     * these, so calling it on a frame whose lineage contains some
@@ -56,12 +81,9 @@ object Components {
   private def ckptKey(r: RDD[_]): (String, Int) =
     (r.context.applicationId, r.id)
 
-  private def registerCkpt(df: DataFrame): Unit =
-    ckptRdds(df).foreach(r => ourCkpts.synchronized(ourCkpts.add(ckptKey(r))): Unit)
-
   /** Release one module-created checkpoint RDD: blocks, and (reliable
-    * mode) the checkpoint files. Registry-guarded — a caller-owned RDD
-    * id is never touched. */
+    * mode) the checkpoint files. Registry-guarded — any other RDD,
+    * caller-owned or never checkpointed, is left untouched. */
   private def releaseRdd(r: RDD[_],
                          hconf: org.apache.hadoop.conf.Configuration): Unit =
     if (ourCkpts.synchronized(ourCkpts.remove(ckptKey(r)))) {
@@ -103,14 +125,15 @@ object Components {
     * (columns `a`, `b`, any orderable type). Returns (node, component)
     * where component = min node id reachable — one row per node that
     * appears in at least one edge (isolated nodes carry no dedup
-    * information and are not materialized).
+    * information and are not materialized). A null id is no node: an
+    * edge with a null end links nothing and is dropped.
     *
     * @param reliableCheckpoint when set, per-round lineage cuts use a
     *   reliable `checkpoint()` into this directory (a cluster FS path in
     *   production) instead of `localCheckpoint()`: a lost executor
     *   recomputes from the checkpoint files and the job SURVIVES — the
     *   HA configuration for long dedup runs. Default (None) keeps
-    *   localCheckpoint: bounded plans, but an executor loss mid-run
+    *   localCheckpoint: bounded lineage, but an executor loss mid-run
     *   fails the job loudly and it must rerun — the accepted trade for
     *   zero-infrastructure runs. Sets the SparkContext checkpoint dir
     *   (a context-global knob) if unset or different. */
@@ -126,8 +149,9 @@ object Components {
                                     maxIter: Int = 40,
                                     reliableCheckpoint: Option[String] = None)
       : (DataFrame, Int) = {
-    val sc = edges.sparkSession.sparkContext
-    val hconf = edges.sparkSession.sessionState.newHadoopConf()
+    val spark = edges.sparkSession
+    val sc = spark.sparkContext
+    val hconf = spark.sessionState.newHadoopConf()
     reliableCheckpoint.foreach { dir =>
       // setCheckpointDir stores an FS-QUALIFIED, uuid-suffixed SUBPATH
       // (e.g. file:/dir/<uuid>) — comparing it to the raw dir is always
@@ -151,124 +175,73 @@ object Components {
       }
       if (!already) sc.setCheckpointDir(dir)
     }
-    // Partition-once loop keying (r14, guide §2.4 "two operations keyed
-    // the same way share one exchange"): the EDGE list — the big frame —
-    // is hash-partitioned by dst ONCE up front and the dedup aggregates
-    // in place (hash(dst) already clusters equal (src,dst) rows, so
-    // dropDuplicates plans no exchange of its own), then every round's
-    // neighbor-min join reads the cached partitioning instead of
-    // re-shuffling the edges per round; the within-partition sort lets
-    // the per-round sort-merge join skip the edge-side sort too. The
-    // partition count is pinned (REPARTITION_BY_NUM) so AQE's
-    // byte-oriented coalescing cannot shrink the cached side out of
-    // co-partitioning with the label-side scans it must zip with.
-    // Per-round shuffled bytes drop from O(edges) to O(nodes).
-    val nPart = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val sym = edges.select(col("a").as("src"), col("b").as("dst"))
-      .union(edges.select(col("b").as("src"), col("a").as("dst")))
-      .repartition(nPart, col("dst"))
-      .dropDuplicates()
-      .sortWithinPartitions("dst")
+    // both endpoints share the type a union of the two columns would
+    // widen them to (an int `a` beside a long `b` keys as long), read in
+    // ONE scan of the caller's edges
+    val idType = edges.select(col("a")).union(edges.select(col("b")))
+      .schema.head.dataType
+    val pairs = edges
+      .select(col("a").cast(idType), col("b").cast(idType))
+      .where(col("a").isNotNull && col("b").isNotNull)
+    // every RDD below is placed by this one partitioner, so each join is
+    // a narrow (zip-like) dependency and only re-keying shuffles
+    val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    val ord = InterpretedOrdering.forSchema(Seq(idType))
+    val lesser = (x: UnsafeRow, y: UnsafeRow) => if (ord.lteq(x, y)) x else y
+    type Labels = RDD[(UnsafeRow, UnsafeRow)]
+    // symmetrized, deduplicated adjacency list keyed by node: built and
+    // cached ONCE; the loop only ever reads it in place
+    val adj = pairs.queryExecution.toRdd.mapPartitions { rows =>
+      val a = UnsafeProjection.create(BoundReference(0, idType, nullable = true))
+      val b = UnsafeProjection.create(BoundReference(1, idType, nullable = true))
+      rows.flatMap { r =>
+        val (x, y) = (a(r).copy(), b(r).copy())
+        Iterator(x -> y, y -> x)
+      }
+    }.groupByKey(part).mapValues(_.toArray.distinct)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // label frames stay hash(node)-partitioned round to round: the init
-    // distinct establishes it, and each round's checkpoint re-establishes
-    // it (the repartition below), so the stepped join, the pointer-jump
-    // p-side (node aliased to label), and the convergence-count join all
-    // plan ZERO exchanges — only the neighbor-min aggregation and the
-    // jump's l-side re-key per round.
-    var labels = sym.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var jumped: DataFrame = null
-    var next: DataFrame = null
-    // the checkpoint RDD backing `labels` / `next` THIS call created —
-    // superseded rounds release through these tracked handles, never by
-    // scanning the frame's lineage: round-0 `labels` derives from the
-    // CALLER's edges plan, and a lineage scan there would free a
-    // still-live checkpoint frame the caller passed as input (e.g. a
-    // prior connectedComponents result used as edges)
-    var labelsRdd: Option[RDD[_]] = None
-    var nextRdd: Option[RDD[_]] = None
+    // every node starts as its own label, on adj's partitioning
+    var labels: Labels =
+      adj.mapPartitions(_.map { case (n, _) => n -> n },
+        preservesPartitioning = true)
+    var next: Labels = null
     var it = 0
     var converged = false
     try {
       while (!converged && it < maxIter) {
-        // 1. neighbor-min FUSED with the keep-own-label step (r14): the
-        //    old shape aggregated neighbor labels and then LEFT-joined
-        //    labels back to apply least(own, nbr_min) — a second join
-        //    (and its broadcast/exchange) per round for what is just
-        //    "min over (own label ∪ neighbors' labels)". Union the
-        //    node's own label row into the aggregation instead: same
-        //    values exactly (min is order-insensitive over the same
-        //    set), one aggregation, one exchange. Every node appears in
-        //    `labels`, so no node is lost by dropping the left join.
-        val stepped = sym
-          .join(labels.withColumnRenamed("node", "dst"), "dst")
-          .select(col("src"), col("label"))
-          .union(labels.select(col("node").as("src"), col("label")))
-          .groupBy(col("src").as("node"))
-          .agg(min(col("label")).as("label"))
+        // 1. each node's min over its own label and its neighbors' labels
+        val stepped = adj.join(labels, part)
+          .flatMap { case (n, (nbrs, l)) =>
+            Iterator.single(n -> l) ++ nbrs.iterator.map(_ -> l)
+          }
+          .reduceByKey(part, lesser)
         // 2. pointer jump: label := label(label) — halves chain depth, the
-        //    O(log d) ingredient (plain propagation walks one hop per round)
-        jumped = stepped.as("l")
-          .join(stepped.select(col("node").as("label"),
-            col("label").as("parent")).as("p"), Seq("label"), "left")
-          .select(col("node"),
-            least(col("label"), coalesce(col("parent"), col("label")))
-              .as("label"))
-          // re-key the round's output by node BEFORE the checkpoint:
-          // Dataset.checkpoint records the executed plan's output
-          // partitioning on its LogicalRDD, so next round's labels scan
-          // arrives hash(node)-partitioned and the stepped /
-          // convergence-count joins skip their exchanges (the jump join
-          // left the frame keyed by label — useless downstream)
-          .repartition(nPart, col("node"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        // checkpoint TRUNCATES lineage: after it materializes (at the
-        // `changed` count below, while `jumped` is still persisted), the
-        // per-round plan can't grow unboundedly. localCheckpoint blocks
-        // die with their executor (job fails loudly, rerun); the
-        // reliableCheckpoint knob writes files a lost executor recovers
-        // from. The recompute-to-write pass a reliable checkpoint runs
-        // reads `jumped`'s persisted blocks, not the full lineage.
-        // partitioning-preserving checkpoint (CheckpointBridge): plain
-        // Dataset.localCheckpoint records UnknownPartitioning under AQE,
-        // which would throw away the repartition above and put the
-        // exchanges back into every downstream join
-        next = org.apache.spark.sql.graftx.CheckpointBridge
-          .checkpointKeyed(jumped, Seq("node"),
-            reliable = reliableCheckpoint.isDefined)
-        registerCkpt(next)
-        nextRdd = ckptRdds(next).headOption // next IS the bare LogicalRDD
-        // the count below is what materializes the lazy checkpoint — if
-        // that job dies partway, `next`'s already-stored blocks are
-        // released by the finally (it never became `labels`)
-        val changedDf = next.as("n")
-          .join(labels.as("o"), Seq("node"))
-          .filter(col("n.label") =!= col("o.label"))
-          .limit(1)
-        // dev knob: dump the round's physical plans (the loop's real
-        // shape — the RETURNED frame's plan is checkpoint-truncated)
-        if (sys.env.get("GRAFT_CC_EXPLAIN").contains("1") && it == 1) {
-          println(s"=== CC round ${it + 1}: jumped (pre-checkpoint) ===")
-          println(jumped.queryExecution.executedPlan.toString)
-          println(s"=== CC round ${it + 1}: convergence count ===")
-          println(changedDf.queryExecution.executedPlan.toString)
-        }
-        val changed = changedDf.count()
-        // `next` is now self-contained: release the SUPERSEDED round —
-        // round 0's CacheManager cache via unpersist, later rounds'
-        // RDD-level checkpoint blocks/files via the TRACKED rdd handle
-        // (Dataset.unpersist can't see those; leaking one per round held
-        // every round's node-set in storage for the session)
-        labels.unpersist(false)
-        labelsRdd.foreach(releaseRdd(_, hconf))
-        jumped.unpersist(false)
-        jumped = null
+        //    O(log d) ingredient (plain propagation walks one hop per
+        //    round). Re-key by label to meet the label's own row, then
+        //    re-key back by node for the next round's narrow joins
+        next = stepped.map(_.swap).leftOuterJoin(stepped, part)
+          .map { case (l, (n, parent)) => n -> parent.fold(l)(lesser(l, _)) }
+          .partitionBy(part)
+        // checkpoint TRUNCATES lineage once the count below materializes
+        // it. localCheckpoint blocks die with their executor (job fails
+        // loudly, rerun); the reliableCheckpoint knob writes files a lost
+        // executor recovers from — persisted first, so the file write
+        // reads the round's blocks instead of recomputing the round
+        if (reliableCheckpoint.isDefined) {
+          next.persist(StorageLevel.MEMORY_AND_DISK).checkpoint()
+        } else next.localCheckpoint()
+        ourCkpts.synchronized(ourCkpts.add(ckptKey(next))): Unit
+        // the round's ONE job: computes and stores `next`, and counts the
+        // nodes whose label moved. If it dies partway, `next`'s stored
+        // blocks are released by the finally (it never became `labels`)
+        val changed = next.join(labels, part)
+          .filter { case (_, (now, before)) => now != before }
+          .count()
+        // `next` is self-contained now: release the superseded round
+        // (a no-op for the initial labels, which are no checkpoint)
+        releaseRdd(labels, hconf)
         labels = next
-        labelsRdd = nextRdd
         next = null
-        nextRdd = None
         converged = changed == 0
         it += 1
       }
@@ -279,16 +252,19 @@ object Components {
       // block this call pinned — including a mid-materialization `next`;
       // on success only the RETURNED frame's checkpoint survives, and
       // [[release]] frees it once the caller has materialized results
-      sym.unpersist(false)
-      if (jumped != null) jumped.unpersist(false)
-      if (next != null) {
-        next.unpersist(false); nextRdd.foreach(releaseRdd(_, hconf))
-      }
-      if (!converged) {
-        labels.unpersist(false); labelsRdd.foreach(releaseRdd(_, hconf))
+      adj.unpersist(false)
+      if (next != null) releaseRdd(next, hconf)
+      if (!converged) releaseRdd(labels, hconf)
+    }
+    val rows = labels.mapPartitions { ls =>
+      val toScala = CatalystTypeConverters.createToScalaConverter(idType)
+      ls.map { case (n, c) =>
+        Row(toScala(n.get(0, idType)), toScala(c.get(0, idType)))
       }
     }
-    (labels.withColumnRenamed("label", "component"), it)
+    (spark.createDataFrame(rows, StructType(Seq(
+      StructField("node", idType, nullable = false),
+      StructField("component", idType, nullable = false)))), it)
   }
 
   /** Dedup-cluster table from near-dup pairs: component id (= smallest

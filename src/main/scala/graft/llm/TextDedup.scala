@@ -70,8 +70,13 @@ object TextDedup {
   /** Per-doc shingle frame `(id, sh)`. Callers running BOTH candidate
     * generation and verification should put an Exchange barrier (e.g.
     * `.repartition(col("id"))`) behind this — shingling is the expensive
-    * derivation; the barrier stops projection collapse from recomputing
-    * it per use site and lets the branches share one ReusedExchange. */
+    * derivation, and the barrier stops projection collapse from inlining
+    * it into every expression that reads `sh`. It does NOT make the
+    * branches share one shingle pass: each branch pushes its own filters
+    * below the barrier (`size(sh) > 0`, and the filters inferred from
+    * `explode`), so their exchanges differ and only branches with
+    * identical filters meet in a ReusedExchange — in the candidate +
+    * verify pipeline, one of four. */
   def withShingles(df: DataFrame, idCol: String, textCol: String,
                    ngram: Int = 3): DataFrame =
     df.select(col(idCol).as("id"), shingles(col(textCol), ngram).as("sh"))

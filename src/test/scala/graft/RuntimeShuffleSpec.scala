@@ -85,7 +85,7 @@ class RuntimeShuffleSpec extends AnyFunSuite {
     // q34 (r15): the verified-pair frame is session-cached (shared with
     // q87), so a warm run's only shuffle is the output sort — the plan
     // FINGERPRINT grew to 5 (cached subtree printing) while this count
-    // dropped; q87 warm = the CC loop's per-round exchanges + window
+    // dropped; q87 warm = the CC loop's per-round shuffles + window
     // over the cached pairs, with the pair pipeline fully absorbed.
     // q41 tightened 7 → 6 after the scoring-scaler fit fused into the
     // segmented CV pass (its single-partition agg exchange is gone)
@@ -94,12 +94,12 @@ class RuntimeShuffleSpec extends AnyFunSuite {
       "q29_anomaly_frame" -> 5,
       "q72_lookahead_forecast" -> 6,
       "q34_minhash_dup_pairs" -> 1,
-      // q87 warm measures 10-12 across runs: the CC loop's per-round
-      // joins read checkpoint-backed frames with unknown stats, and
-      // AQE's broadcast-vs-shuffle choice flips a couple of exchanges
-      // either way. 12 is the observed band's top; losing the pair
-      // cache would re-run the band-join pipeline (≥ +4) and still fail
-      "q87_dup_clusters" -> 12)
+      // q87 warm = 9 in three of three runs: the CC loop is RDD code
+      // on one hash partitioner, so AQE has no per-round choice to
+      // flip — one adjacency build, three shuffles a round, then the
+      // window and the sort. Losing the pair cache would re-run the
+      // band-join pipeline (≥ +4) and fail
+      "q87_dup_clusters" -> 9)
     val measured = pinned.keys.toSeq.sorted.map(n => n -> runWarm(n))
     val over = measured.collect {
       case (n, got) if got > pinned(n) =>
